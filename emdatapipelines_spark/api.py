@@ -14,6 +14,7 @@ boundary, not the data path).
 from __future__ import annotations
 
 import hashlib
+import threading
 import time
 from collections import defaultdict, deque
 from dataclasses import dataclass, field
@@ -82,6 +83,11 @@ class QueryEngine:
         self.rate_limiter = RateLimiter()
         self.usage_log: list[dict] = []
         self._cache: dict[str, _CacheEntry] = {}
+        #: guards ``_cache`` and ``_filling``; ``_filling`` holds one gate per
+        #: fingerprint being planned, so concurrent misses on one query wait
+        #: for the first client's frame instead of each persisting their own
+        self._lock = threading.Lock()
+        self._filling: dict[str, threading.Lock] = {}
         #: optional GovernanceLog (`lineage.py`): data-access compliance
         #: events per served query + rate-limit denials, the reference's
         #: federal-compliance usage logging at the query boundary
@@ -132,14 +138,8 @@ class QueryEngine:
         t0 = time.perf_counter()
         try:
             if use_cache:
-                hit = self._cache.get(fp)
-                if hit and hit.expires_at > now:
-                    return hit.df
-            df = self.spark.sql(query)
-            if use_cache:
-                df = df.cache()
-                self._cache[fp] = _CacheEntry(df, now + self.cache_ttl)
-            return df
+                return self._cached(fp, query, now)
+            return self.spark.sql(query)
         except Exception:
             entry["ok"] = False
             raise
@@ -148,6 +148,34 @@ class QueryEngine:
             # field api_performance aggregates into its percentile buffers
             entry["elapsed_ms"] = (time.perf_counter() - t0) * 1000.0
 
+    def _cached(self, fp: str, query: str, now: float) -> DataFrame:
+        """The cached frame for ``fp``, planned and persisted by exactly one
+        of the clients that miss on it at once; the others wait for it.
+        Planning runs outside the engine-wide lock, so misses on different
+        queries do not wait for each other. An expired entry is unpersisted
+        before its replacement is planned."""
+        with self._lock:
+            hit = self._cache.get(fp)
+            if hit is not None and hit.expires_at > now:
+                return hit.df
+            gate = self._filling.setdefault(fp, threading.Lock())
+        with gate:
+            with self._lock:
+                hit = self._cache.get(fp)
+                if hit is not None and hit.expires_at > now:
+                    return hit.df
+                expired = self._cache.pop(fp, None)
+            if expired is not None:
+                _unpersist(expired.df)
+            try:
+                df = self.spark.sql(query).cache()
+                with self._lock:
+                    self._cache[fp] = _CacheEntry(df, now + self.cache_ttl)
+            finally:
+                with self._lock:
+                    self._filling.pop(fp, None)
+        return df
+
     def warm(self, queries: list[str], now: float | None = None) -> None:
         """Pre-populate the cache (`public_resources.py:537-599` warm list)."""
         for q in queries:
@@ -155,11 +183,16 @@ class QueryEngine:
 
     def evict_expired(self, now: float | None = None) -> int:
         now = now if now is not None else time.time()
-        dead = [k for k, v in self._cache.items() if v.expires_at <= now]
-        for k in dead:
-            try:
-                self._cache[k].df.unpersist()
-            except Exception:
-                pass
-            del self._cache[k]
+        with self._lock:
+            dead = [self._cache.pop(k) for k, v in list(self._cache.items())
+                    if v.expires_at <= now]
+        for entry in dead:
+            _unpersist(entry.df)
         return len(dead)
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass

@@ -13,6 +13,16 @@ governance surfaces the reference wires around its dbt DAG all enabled:
 - SCD2:      timestamp-strategy snapshot of declaration state with hard
   deletes (≈ `snapshots/disaster_declarations_snapshot.sql`)
 
+The model DAG builds on the registry's dependency-driven scheduler
+(`plans/registry.py`). The gate suite, the retention frame, the SCD2 merge
+and the serving-table frames are then built on the calling thread, in that
+order, and each step's actions (``collect`` / ``count``) are submitted to a
+driver thread pool as its frames are built: none of them depends on
+another, so they overlap, and the report is assembled from their results
+once all have finished. The lineage and compliance counts run after them
+on the calling thread: overlapping those too measured slower (five of five
+alternating cold runs at scale 0.1 on a 4-core host).
+
 `run_governed_pipeline` returns a JSON-able run report;
 `scripts/run_governed_pipeline.py` executes it at sf1 and commits the
 report (GOVERNED_RUN.json), and `tests/test_governed_run.py` pins the
@@ -22,8 +32,10 @@ invariants at sf0.01.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession, functions as F
 
 from ..audit import retention_filter
@@ -77,64 +89,75 @@ def run_governed_pipeline(
     wall0 = time.perf_counter()
     reg.build(spark, now=now)
 
-    # quality gates on the staging layer (dbt test analog) — evaluated
-    # BEFORE the serving tables are declared good
-    stg_d = reg.results["stg_declarations"]
-    stg_a = reg.results["stg_alerts"]
-    gates = run_test_suite(
-        [
-            TestCase("stg_declarations.not_null.declaration_id",
-                     test_not_null(stg_d, "declaration_id")),
-            TestCase("stg_declarations.unique.declaration_id",
-                     test_unique(stg_d, "declaration_id")),
-            TestCase("stg_declarations.range.region_key",
-                     test_accepted_range(stg_d, "region_key", 0, 24)),
-            TestCase("stg_alerts.not_null.alert_id",
-                     test_not_null(stg_a, "alert_id")),
-            TestCase("stg_alerts.range.magnitude",
-                     test_accepted_range(stg_a, "magnitude", 0.0, 1e9)),
-        ]
-    ).collect()
-    gate_failures = [r["test_name"] for r in gates if r["status"] == "fail"]
+    workers = spark.sparkContext.defaultParallelism
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=workers, thread_name_prefix="action") as pool:
 
-    # retention (S13): rewrite the alert staging table to the keep window,
-    # recording the compliance event
-    kept_alerts = retention_filter(
-        stg_a,
-        "alert_date",
-        retention_days,
-        governance=gov,
-        table_name="stg_alerts",
-    )
-    n_alerts = stg_a.count()
-    n_kept = kept_alerts.count()
+        def submit(action):
+            return pool.submit(inherit(action))
 
-    # SCD2 (timestamp strategy + hard deletes): day-1 snapshot of the
-    # declaration state, then merge the "next day" slice — cost changes
-    # close the old version, vanished declarations hard-invalidate
-    decls = stg_d.select(
-        "declaration_id",
-        "incident_type",
-        F.col("estimated_cost").cast("double").alias("estimated_cost"),
-        F.col("declaration_date").cast("timestamp").alias("updated_at"),
-    )
-    snap = scd2_init(decls.filter(F.col("declaration_id") % 7 != 0), "updated_at")
-    day2 = decls.filter(F.col("declaration_id") % 3 != 0).withColumn(
-        "estimated_cost", F.col("estimated_cost") * 1.1
-    ).withColumn("updated_at", F.col("updated_at") + F.expr("INTERVAL 1 DAY"))
-    merged = scd2_merge(snap, day2, key="declaration_id", updated_at="updated_at")
-    scd2_rows = merged.count()
-    scd2_current = merged.filter(F.col("is_current")).count()
+        # quality gates on the staging layer (dbt test analog) — evaluated
+        # BEFORE the serving tables are declared good
+        stg_d = reg.results["stg_declarations"]
+        stg_a = reg.results["stg_alerts"]
+        gates = submit(
+            run_test_suite(
+                [
+                    TestCase("stg_declarations.not_null.declaration_id",
+                             test_not_null(stg_d, "declaration_id")),
+                    TestCase("stg_declarations.unique.declaration_id",
+                             test_unique(stg_d, "declaration_id")),
+                    TestCase("stg_declarations.range.region_key",
+                             test_accepted_range(stg_d, "region_key", 0, 24)),
+                    TestCase("stg_alerts.not_null.alert_id",
+                             test_not_null(stg_a, "alert_id")),
+                    TestCase("stg_alerts.range.magnitude",
+                             test_accepted_range(stg_a, "magnitude", 0.0, 1e9)),
+                ]
+            ).collect
+        )
 
-    # force-materialize the serving layer and count rows
-    table_counts = {}
-    for name in REPORT_TABLES:
-        if name in reg.results:
-            table_counts[name] = reg.results[name].count()
+        # retention (S13): rewrite the alert staging table to the keep
+        # window, recording the compliance event
+        kept_alerts = retention_filter(
+            stg_a,
+            "alert_date",
+            retention_days,
+            governance=gov,
+            table_name="stg_alerts",
+        )
+        n_alerts = submit(stg_a.count)
+        n_kept = submit(kept_alerts.count)
+
+        # SCD2 (timestamp strategy + hard deletes): day-1 snapshot of the
+        # declaration state, then merge the "next day" slice — cost changes
+        # close the old version, vanished declarations hard-invalidate
+        decls = stg_d.select(
+            "declaration_id",
+            "incident_type",
+            F.col("estimated_cost").cast("double").alias("estimated_cost"),
+            F.col("declaration_date").cast("timestamp").alias("updated_at"),
+        )
+        snap = scd2_init(decls.filter(F.col("declaration_id") % 7 != 0), "updated_at")
+        day2 = decls.filter(F.col("declaration_id") % 3 != 0).withColumn(
+            "estimated_cost", F.col("estimated_cost") * 1.1
+        ).withColumn("updated_at", F.col("updated_at") + F.expr("INTERVAL 1 DAY"))
+        merged = scd2_merge(snap, day2, key="declaration_id", updated_at="updated_at")
+        scd2_rows = submit(merged.count)
+        scd2_current = submit(merged.filter(F.col("is_current")).count)
+
+        # force-materialize the serving layer and count rows
+        table_counts = {}
+        for name in REPORT_TABLES:
+            if name in reg.results:
+                table_counts[name] = submit(reg.results[name].count)
 
     wall = round(time.perf_counter() - wall0, 2)
     lineage = gov.lineage_df(spark)
     compliance = gov.compliance_df(spark)
+    gates = gates.result()
+    gate_failures = [r["test_name"] for r in gates if r["status"] == "fail"]
+    n_alerts, n_kept = n_alerts.result(), n_kept.result()
     return {
         "sf_dir": sf_dir,
         "wall_sec": wall,
@@ -148,8 +171,11 @@ def run_governed_pipeline(
             "rows_kept": n_kept,
             "rows_purged": n_alerts - n_kept,
         },
-        "scd2": {"snapshot_rows": scd2_rows, "current_rows": scd2_current},
-        "table_counts": table_counts,
+        "scd2": {
+            "snapshot_rows": scd2_rows.result(),
+            "current_rows": scd2_current.result(),
+        },
+        "table_counts": {name: fut.result() for name, fut in table_counts.items()},
         "lineage_records": lineage.count(),
         "compliance_events": compliance.count(),
     }

@@ -53,3 +53,46 @@ def test_engine_sql_cache_and_quota(spark):
     with pytest.raises(PermissionError):
         for i in range(10):
             eng.sql("SELECT 1 AS one", org="greedy", now=t0 + 10 + i)
+
+
+def test_concurrent_misses_persist_one_frame(spark):
+    """Clients that miss on one query at the same instant share one cached
+    frame: exactly one is planned and persisted, and it is the frame the
+    cache holds, so none is left pinned without an entry pointing at it."""
+    import sys
+    import threading
+
+    n = 8
+    eng = QueryEngine(spark, cache_ttl_seconds=300)
+    spark.range(50).createOrReplaceTempView("api_race_tbl")
+    query = "SELECT id % 5 AS k, COUNT(*) AS c FROM api_race_tbl GROUP BY id % 5"
+    barrier = threading.Barrier(n)
+    frames = [None] * n
+    errors = []
+
+    def client(i):
+        try:
+            barrier.wait()
+            frames[i] = eng.sql(query, org=f"org{i}", now=7000.0)
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(n)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors
+    cached = eng._cache[fingerprint_query(query)].df
+    assert all(df is cached for df in frames)
+    assert cached.is_cached
+    assert eng._filling == {}
+    assert sorted(r["c"] for r in cached.collect()) == [10] * 5
+    assert eng.evict_expired(now=7301.0) == 1
+    assert not cached.is_cached

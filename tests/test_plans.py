@@ -1,8 +1,13 @@
 """Model-registry DAG semantics (dbt build analog): topo order, selective
-builds, MV refresh, cycle detection.
+builds, MV refresh, cycle detection, and the concurrent scheduler that runs
+each model as soon as its dependencies are built.
 """
 
 from __future__ import annotations
+
+import threading
+import time
+from datetime import datetime, timedelta
 
 import pytest
 
@@ -29,6 +34,16 @@ def _dag(spark):
     return reg
 
 
+def _sleeper(seconds, log=None, tag=None):
+    def fn(s, deps):
+        time.sleep(seconds)
+        if log is not None:
+            log.append(tag)
+        return s.range(1)
+
+    return fn
+
+
 def test_build_topo_and_views(spark):
     reg = _dag(spark)
     results = reg.build(spark)
@@ -47,8 +62,12 @@ def test_materialized_names_public_accessor(spark):
 
 def test_selective_build_pulls_deps(spark):
     reg = _dag(spark)
+    built = []
+    reg.register(Model("unrelated", _sleeper(0, built, "unrelated")))
+    reg.register(Model("on_top", _sleeper(0, built, "on_top"), deps=["mart_sum"]))
     results = reg.build(spark, select=["mart_sum"])
-    assert "src_nums" in results and "mart_sum" in results
+    assert set(results) == {"src_nums", "stg_even", "mart_sum"}
+    assert built == []
 
 
 def test_refresh_materialized(spark):
@@ -433,3 +452,153 @@ def test_staleness_guard_in_mart_serving_path(spark):
     assert len(calls) == first_count
     release_tracked()
     spark.catalog.clearCache()
+
+
+# -- concurrent scheduler -----------------------------------------------------
+
+
+def test_independent_models_build_concurrently(spark):
+    reg = ModelRegistry()
+    reg.register(Model("slow_a", _sleeper(1.0)))
+    reg.register(Model("slow_b", _sleeper(1.0)))
+    t = time.perf_counter()
+    reg.build(spark)
+    assert time.perf_counter() - t < 1.6
+    assert set(reg.results) == {"slow_a", "slow_b"}
+
+
+def test_diamond_build_matches_topological_order(spark):
+    """``top`` finishes after ``right`` (it sleeps), yet results, views,
+    ``last_built`` and lineage come out as the topological order gives."""
+    from emdatapipelines_spark.lineage import GovernanceLog
+
+    gov = GovernanceLog()
+    reg = ModelRegistry(governance=gov)
+    finished = []
+
+    @reg.model("dm_root", materialization="table")
+    def dm_root(s, deps):
+        return s.range(8).withColumnRenamed("id", "n")
+
+    @reg.model("dm_left", deps=["dm_root"])
+    def dm_left(s, deps):
+        time.sleep(0.5)
+        finished.append("dm_left")
+        return deps["dm_root"].filter(F.col("n") % 2 == 0)
+
+    @reg.model("dm_right", deps=["dm_root"], materialization="table")
+    def dm_right(s, deps):
+        finished.append("dm_right")
+        return deps["dm_root"].filter(F.col("n") % 2 == 1)
+
+    @reg.model("dm_join", deps=["dm_left", "dm_right"])
+    def dm_join(s, deps):
+        return deps["dm_left"].union(deps["dm_right"]).agg(F.sum("n").alias("t"))
+
+    t0 = datetime(2024, 3, 1)
+    reg.build(spark, now=t0)
+    order = reg.topo_order()
+    assert order == ["dm_root", "dm_left", "dm_right", "dm_join"]
+    assert finished == ["dm_right", "dm_left"]  # completion order differs
+    assert set(reg.results) == set(order)
+    assert reg.results["dm_join"].first()["t"] == 28
+    assert spark.sql("SELECT COUNT(*) AS c FROM dm_left").first()["c"] == 4
+    assert spark.sql("SELECT SUM(n) AS t FROM dm_right").first()["t"] == 16
+    assert list(reg.last_built.items()) == [(n, t0) for n in order]
+    assert [r[1] for r in gov.lineage_rows] == [
+        "dm_root", "dm_left", "dm_right", "dm_join", "dm_join"
+    ]
+    assert [r[0] for r in gov.lineage_rows] == [
+        "<none>", "dm_root", "dm_root", "dm_left", "dm_right"
+    ]
+
+
+def test_failing_model_stops_its_dependents(spark):
+    """A raising model fails build(): its dependents never run, models
+    already running finish, and no worker thread outlives the call."""
+    reg = ModelRegistry()
+    ran = []
+    reg.register(Model("fx_slow", _sleeper(0.5, ran, "fx_slow")))
+
+    def bad(s, deps):
+        raise RuntimeError("model exploded")
+
+    reg.register(Model("fx_bad", bad))
+    reg.register(Model("fx_after", _sleeper(0, ran, "fx_after"), deps=["fx_bad"]))
+    reg.register(
+        Model("fx_after_slow", _sleeper(0, ran, "fx_after_slow"), deps=["fx_slow"])
+    )
+    with pytest.raises(RuntimeError, match="model exploded"):
+        reg.build(spark)
+    assert ran == ["fx_slow"]
+    assert "fx_after" not in reg.results and "fx_after_slow" not in reg.results
+    assert not [t for t in threading.enumerate() if t.name.startswith("model")]
+
+
+def test_run_due_refreshes_on_the_scheduler(spark):
+    """Two due roots refresh concurrently; their built dependent rebuilds
+    after both, over the refreshed frames."""
+    reg = ModelRegistry()
+    log = []
+    source = {"rows": 3}
+
+    for root in ("due_a", "due_b"):
+
+        @reg.model(root, materialization="table", refresh_interval=timedelta(minutes=5))
+        def _root(s, deps, root=root):
+            time.sleep(1.0)
+            log.append(root)
+            return s.range(source["rows"])
+
+    @reg.model("due_sum", deps=["due_a", "due_b"])
+    def due_sum(s, deps):
+        log.append("due_sum")
+        return deps["due_a"].union(deps["due_b"]).agg(F.count("*").alias("c"))
+
+    t0 = datetime(2024, 4, 1)
+    reg.build(spark, now=t0)
+    assert reg.results["due_sum"].first()["c"] == 6
+    log.clear()
+    source["rows"] = 5
+    t = time.perf_counter()
+    ran = reg.run_due(spark, t0 + timedelta(minutes=6))
+    assert time.perf_counter() - t < 1.6
+    assert ran == ["due_a", "due_b", "due_sum"]
+    assert sorted(log[:2]) == ["due_a", "due_b"] and log[2] == "due_sum"
+    assert reg.results["due_sum"].first()["c"] == 10
+    assert all(reg.last_built[n] == t0 + timedelta(minutes=6) for n in ran)
+
+
+def test_consumer_read_during_build_is_still_guarded(spark):
+    """A build running on another thread does not switch the staleness
+    guard off: a consumer read of a stale model still warns."""
+    from emdatapipelines_spark.plans.registry import StaleModelWarning
+
+    reg = ModelRegistry()
+    release = threading.Event()
+    started = threading.Event()
+
+    @reg.model("gd_mv", materialization="table", refresh_interval=timedelta(minutes=5))
+    def gd_mv(s, deps):
+        return s.range(2)
+
+    @reg.model("gd_hold")
+    def gd_hold(s, deps):
+        started.set()
+        release.wait(30)
+        return s.range(1)
+
+    t0 = datetime(2024, 5, 1)
+    reg.build(spark, select=["gd_mv"], now=t0)
+    builder = threading.Thread(target=reg.build, args=(spark, ["gd_hold"]))
+    builder.start()
+    try:
+        assert started.wait(30)
+        reg.now_provider = lambda: t0 + timedelta(minutes=9)
+        with pytest.warns(StaleModelWarning, match="gd_mv"):
+            reg.results["gd_mv"]
+    finally:
+        release.set()
+        builder.join(30)
+    assert not builder.is_alive()
+    assert "gd_hold" in reg.results
